@@ -1,14 +1,14 @@
 """Seeded benchmark inputs and their oracle answers, cached per seed and size.
 
-Generation runs once per (seed, docs, queries) in a checkout, before Spark
+Generation runs once per (seed, docs) in a checkout, before Spark
 starts, so it stays out of every timed region and out of ``setup_s`` and
 does not warm the JVM that the run then measures:
 
 - the corpus holds the rows of ``corpus.synth_corpus(spark, docs, seed)``,
-  generated partition by partition with the same per-partition function in
-  ``nproc`` child processes and written as one Parquet file per partition;
-- the query pool comes from ``corpus.reference_queries`` (1-6 terms drawn
-  from hot, mid and absent vocabularies);
+  generated by the same per-row function in ``nproc`` child processes, each
+  writing one Parquet file of a contiguous range of rows;
+- the pool of ``QUERIES`` queries comes from ``corpus.reference_queries``
+  (1-6 terms drawn from hot, mid and absent vocabularies);
 - the expected answers come from ``oracle.py``: corpus stats, every term's
   document frequency, and the top-k of every pool query.
 
@@ -21,14 +21,17 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import multiprocessing
 import os
 import shutil
 import subprocess
 import sys
+from concurrent.futures import ProcessPoolExecutor
 
 import pandas as pd
 
 K = 10
+QUERIES = 100
 
 
 def dir_bytes(path: str) -> int:
@@ -51,26 +54,32 @@ def doc_id(repo: str, path: str, commit: str) -> int:
     return h - (1 << 64) if h >= 1 << 63 else h
 
 
-def _write_parts(seed: int, specs: list[str]) -> None:
-    """Child process: write each ``start:count:path`` range of the corpus."""
+def _write_part(seed: int, start: int, count: int, path: str) -> None:
+    """Child process: write rows [start, start+count) of the corpus."""
     from goldenretriever_spark import corpus
 
-    for spec in specs:
-        start, count, path = spec.split(":", 2)
-        corpus.synth_corpus_pandas_range(int(start), int(count), seed).to_parquet(
-            path, index=False)
+    corpus.synth_corpus_pandas_range(start, count, seed).to_parquet(path, index=False)
 
 
-def prepare(cache_root: str, seed: int, n_docs: int, n_queries: int, workers: int) -> dict:
+_ORACLE = None
+
+
+def _oracle_top_k(text: str) -> list[tuple[int, float]]:
+    from goldenretriever_spark import oracle
+
+    return oracle.top_k(_ORACLE, text, k=K)
+
+
+def prepare(cache_root: str, seed: int, n_docs: int, workers: int) -> dict:
     """Return the cached inputs for ``seed``, generating them if missing.
 
     Keys: corpus_path, corpus_bytes, digest, queries [(qid, text)],
     answers {qid: [(doc_id, score)]}, n_docs, avgdl, df {term: df}.
     """
-    root = os.path.join(cache_root, f"seed{seed}-docs{n_docs}-q{n_queries}")
+    root = os.path.join(cache_root, f"seed{seed}-docs{n_docs}")
     meta_path = os.path.join(root, "expected.json")
     if not os.path.exists(meta_path):
-        _generate(root, seed, n_docs, n_queries, workers)
+        _generate(root, seed, n_docs, workers)
     with open(meta_path) as f:
         meta = json.load(f)
     meta["corpus_path"] = os.path.join(root, "corpus.parquet")
@@ -79,21 +88,18 @@ def prepare(cache_root: str, seed: int, n_docs: int, n_queries: int, workers: in
     return meta
 
 
-def _generate(root: str, seed: int, n_docs: int, n_queries: int, workers: int) -> None:
+def _generate(root: str, seed: int, n_docs: int, workers: int) -> None:
     from goldenretriever_spark import corpus, oracle
 
     tmp = root + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     corpus_path = os.path.join(tmp, "corpus.parquet")
     os.makedirs(corpus_path)
-    # the partitioning synth_corpus uses, so the build reads the same splits
-    parts = max(1, min(64, n_docs // 250 or 1))
-    counts = [n_docs // parts + (1 if p < n_docs % parts else 0) for p in range(parts)]
-    starts = [sum(counts[:p]) for p in range(parts)]
-    files = [os.path.join(corpus_path, f"part-{p:05d}.parquet") for p in range(parts)]
-    specs = [f"{starts[p]}:{counts[p]}:{files[p]}" for p in range(parts)]
-    procs = [subprocess.Popen([sys.executable, os.path.abspath(__file__), str(seed), *chunk])
-             for chunk in (specs[w::workers] for w in range(workers)) if chunk]
+    bounds = [n_docs * w // workers for w in range(workers + 1)]
+    files = [os.path.join(corpus_path, f"part-{w:05d}.parquet") for w in range(workers)]
+    procs = [subprocess.Popen([sys.executable, os.path.abspath(__file__), str(seed),
+                               str(bounds[w]), str(bounds[w + 1] - bounds[w]), files[w]])
+             for w in range(workers)]
     codes = [p.wait() for p in procs]
     if any(codes):
         raise RuntimeError(f"corpus generation failed: exit codes {codes}")
@@ -103,11 +109,16 @@ def _generate(root: str, seed: int, n_docs: int, n_queries: int, workers: int) -
     )
     if len({d for d, _ in docs}) != len(docs):
         raise RuntimeError(f"doc_id collision in seed {seed} corpus")
-    oidx = oracle.build_oracle_index(docs)
+    global _ORACLE
+    _ORACLE = oidx = oracle.build_oracle_index(docs)
 
-    qdf = corpus.reference_queries(n_queries, seed=seed)
+    qdf = corpus.reference_queries(QUERIES, seed=seed)
     queries = [(int(r.query_id), r.query_str) for r in qdf.itertuples()]
-    answers = {qid: oracle.top_k(oidx, text, k=K) for qid, text in queries}
+    # forked workers inherit the oracle index instead of pickling it
+    with ProcessPoolExecutor(workers, mp_context=multiprocessing.get_context("fork")) as pool:
+        answers = dict(zip((q for q, _ in queries),
+                           pool.map(_oracle_top_k, (t for _, t in queries))))
+    _ORACLE = None
 
     h = hashlib.sha256()
     for did, content in docs:
@@ -157,4 +168,4 @@ def answer_errors(rows, expected: dict[int, list[tuple[int, float]]], qids) -> l
 
 
 if __name__ == "__main__":
-    _write_parts(int(sys.argv[1]), sys.argv[2:])
+    _write_part(int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])

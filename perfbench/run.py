@@ -46,7 +46,7 @@ def run_one(args) -> int:
     from workloads import Run
 
     run = Run(args.workload, args.seed, args.seconds, bool(args.trace),
-              args.docs, args.pool, WORK_DIR)
+              args.docs, WORK_DIR)
     result = run.execute()
     print("context " + json.dumps({
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
@@ -80,7 +80,9 @@ def run_all(args) -> int:
         for trace in (0, 1):
             cmd = [sys.executable, os.path.abspath(__file__), "--workload", workload,
                    "--seed", str(args.seed), "--seconds", str(args.seconds),
-                   "--trace", str(trace), "--docs", str(args.docs), "--pool", str(args.pool)]
+                   "--trace", str(trace)]
+            if args.docs:
+                cmd += ["--docs", str(args.docs)]
             proc = subprocess.run(cmd, stdout=subprocess.PIPE, text=True)
             lines = proc.stdout.strip().splitlines()
             if proc.returncode != 0 or not lines:
@@ -104,8 +106,7 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--docs", type=int, default=2000, help="corpus size")
-    ap.add_argument("--pool", type=int, default=100, help="distinct queries per seed")
+    ap.add_argument("--docs", type=int, help="corpus size (default: the workload's own)")
     args = ap.parse_args(argv)
     if not os.path.isfile(os.path.join(ROOT, "goldenretriever_spark", "__init__.py")):
         print(f"goldenretriever_spark not found next to {HERE}", file=sys.stderr)

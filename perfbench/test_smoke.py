@@ -55,7 +55,7 @@ def test_every_metric_is_printed_at_tiny_size():
     spec = _spec()
     proc = subprocess.run(
         [sys.executable, RUN, "--workload", "all", "--seed", "1", "--seconds", "1",
-         "--docs", "300", "--pool", "50"],
+         "--docs", "300"],
         stdout=subprocess.PIPE, text=True, timeout=1200,
     )
     assert proc.returncode == 0, proc.stdout[-3000:]

@@ -1,10 +1,11 @@
 """The benchmark's workloads: a clean resumable build, then a closed loop of
 ``StoredIndex.search(...).collect()`` calls with one client.
 
-``serve_interactive`` sends one query per call, so per-call fixed costs
-(dispatch, job launch, the Python-worker hand-off) dominate.
-``serve_batch`` sends the same query mix 50 queries per call, so decode,
-score and shuffle volume dominate. Both build their index in set-up with
+``serve_interactive`` sends one query per call on a 2000-doc corpus, so
+per-call fixed costs (dispatch, job launch, the Python-worker hand-off)
+dominate. ``serve_batch`` sends the same query mix 50 queries per call on a
+10 000-doc corpus, where decode, score and shuffle volume make up about 30%
+of a call. Both build their index in set-up with
 ``checkpoint.build_resumable`` into a fresh directory, so the build layers
 are measured on every run as well.
 """
@@ -23,9 +24,11 @@ import inputs
 from probe import RssSampler, Tracer, stop_spark, total
 
 QUERIES_PER_CALL = {"serve_interactive": 1, "serve_batch": 50}
+# corpus docs; each new seed costs about 1.5 s of input generation per 1000
+CORPUS_DOCS = {"serve_interactive": 2000, "serve_batch": 10_000}
 WARMUP_CALLS = {"serve_interactive": 2, "serve_batch": 1}
 # A cold build is dominated by per-job and per-file fixed costs; 16 buckets
-# and one pack group (default 64 and 4) keep a whole run near 50 s while
+# and one pack group (default 64 and 4) keep a whole run near 60 s while
 # still running the staging checkpoint and the per-group pack path.
 N_TERM_BUCKETS = 16
 N_GROUPS = 1
@@ -109,13 +112,10 @@ class Run:
     """One run of one workload: set-up, timed closed loop, checks, metrics."""
 
     def __init__(self, workload: str, seed: int, seconds: float, trace: bool,
-                 n_docs: int, pool: int, work_dir: str):
+                 n_docs: int | None, work_dir: str):
         self.workload, self.seed, self.seconds, self.trace = workload, seed, seconds, trace
-        self.n_docs, self.pool, self.work_dir = n_docs, pool, work_dir
+        self.n_docs, self.work_dir = n_docs or CORPUS_DOCS[workload], work_dir
         self.per_call = QUERIES_PER_CALL[workload]
-        if pool < self.per_call:
-            # a call must not repeat a query id: the engine would merge them
-            raise ValueError(f"query pool {pool} < {self.per_call} queries per call")
         self.attempted = 0
         self.errors: list[str] = []
         self.failed = 0
@@ -130,7 +130,7 @@ class Run:
         from goldenretriever_spark.session import get_spark
 
         data = inputs.prepare(os.path.join(self.work_dir, "inputs"), self.seed,
-                              self.n_docs, self.pool, nproc())
+                              self.n_docs, nproc())
         run_dir = os.path.join(self.work_dir, "runs", uuid.uuid4().hex[:12])
         tmp = os.path.join(run_dir, "tmp")
         os.makedirs(tmp)
