@@ -3,8 +3,8 @@
 crossover:
 	python tools/wand_crossover.py 240000,960000,1920000 --runs=2
 
-test:
-	python -m pytest tests/ -x -q
+test:            # the ROADMAP Tier-1 verify command
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 verify:
 	python tools/driver_sim.py

@@ -100,8 +100,8 @@ def main() -> None:
     # -- q3: stored-index top-k with measured brute/WAND dispatch ------------
     # dispatch_top_k routes the WHOLE batch by the share of estimated decode
     # volume (Σdf per query vs the measured crossover) sitting in heavy
-    # queries; per-query splitting is an explicit opt-in that measured slower
-    # (BENCH/WAND_MIXED.json). Both raw paths are timed below as diagnostics.
+    # queries (one path per batch: a per-query split measured slower,
+    # BENCH/WAND_MIXED.json). Both raw paths are timed below as diagnostics.
     # The recorded auto_path/dispatch is the decision the dispatcher ACTUALLY
     # took, not a re-derivation.
     plan_box: dict = {}

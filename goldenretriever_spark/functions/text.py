@@ -33,7 +33,3 @@ def processed_string(context: Column, raw: Column) -> Column:
     newlines stripped; null context treated as ''."""
     return strip_newlines(F.concat_ws(" ", F.coalesce(context, F.lit("")), raw))
 
-
-def content_sha256(col: Column) -> Column:
-    """input_hint invariant (F12): lowercase-hex sha256 of the content."""
-    return F.sha2(col, 256)

@@ -32,13 +32,42 @@ from pyspark.sql import functions as F
 from goldenretriever_spark.index.build import B, K1, InvertedIndex
 from goldenretriever_spark.tokenizer import tokens_column
 
+def tokenize_batch(queries, tokenizer: str = "simple") -> dict[int, list[str]]:
+    """list[(query_id, query_str)] -> {query_id: unique terms in first-seen
+    order}, tokenized ON THE DRIVER with the oracle twin of the engine
+    tokenizer (equality-tested per input class, tests/test_round2). BM25
+    dedups query terms, so each term appears once per query. A repeated
+    query_id raises ``ValueError``: its queries' terms would otherwise be
+    scored as one merged query."""
+    from goldenretriever_spark.oracle import tokenize
+
+    out: dict[int, list[str]] = {}
+    for qid, qstr in queries:
+        qid = int(qid)
+        if qid in out:
+            raise ValueError(f"query_id {qid} appears more than once in the batch")
+        out[qid] = list(dict.fromkeys(tokenize(qstr, tokenizer)))
+    return out
+
+
+def terms_frame(spark: SparkSession, terms: dict[int, list[str]]) -> DataFrame:
+    """(query_id, term) rows of a :func:`tokenize_batch` result."""
+    out = spark.createDataFrame(
+        [(qid, t) for qid, ts in terms.items() for t in ts],
+        "query_id long, term string",
+    )
+    # batch-width hint for downstream plan selection (top_k's shared
+    # agg/window exchange) — driver-known for list batches, absent otherwise
+    out._gr_n_queries = len(terms)
+    return out
+
+
 def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> DataFrame:
     """queries: DataFrame(query_id, query_str) or list[(id, str)] ->
     (query_id, term) with unique terms per query (BM25 dedups query terms).
 
-    List-typed batches tokenize ON THE DRIVER with the oracle twin of the
-    engine tokenizer (equality-tested per input class, tests/test_round2) —
-    a query batch is tiny, and the createDataFrame -> explode ->
+    List-typed batches tokenize ON THE DRIVER (:func:`tokenize_batch`) — a
+    query batch is tiny, and the createDataFrame -> explode ->
     dropDuplicates plan it replaces paid a full shuffle + two stages inside
     EVERY query call (r7, guide §2.4: remove shuffles outright). DataFrame
     inputs (unknown size) keep the distributed plan."""
@@ -50,18 +79,7 @@ def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> D
             )
             .dropDuplicates(["query_id", "term"])
         )
-    from goldenretriever_spark.oracle import tokenize
-
-    rows = [
-        (int(qid), t)
-        for qid, qstr in queries
-        for t in dict.fromkeys(tokenize(qstr, tokenizer))
-    ]
-    out = spark.createDataFrame(rows, "query_id long, term string")
-    # batch-width hint for downstream plan selection (top_k's shared
-    # agg/window exchange) — driver-known for list batches, absent otherwise
-    out._gr_n_queries = len({qid for qid, _ in queries})
-    return out
+    return terms_frame(spark, tokenize_batch(queries, tokenizer))
 
 
 def idf_col(n_docs: Column, df: Column) -> Column:

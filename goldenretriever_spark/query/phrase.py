@@ -91,45 +91,6 @@ def phrase_match_postings(pp: DataFrame, phrase: list[str]) -> DataFrame:
     )
 
 
-def phrase_match_postings_batch(
-    pp: DataFrame, phrases: list[tuple[int, list[str]]]
-) -> DataFrame:
-    """Batched start-vote: ``(query_id, doc_id, occurrences)`` for a WHOLE
-    phrase batch in one plan over one shared postings frame.
-
-    The per-phrase core (:func:`phrase_match_postings`) pays one
-    prune+decode+vote per phrase; here the broadcast frame carries
-    ``(query_id, term, offset)`` for every phrase and the vote keys on
-    ``(query_id, doc_id, start)``, so a P-phrase batch costs ONE pass over
-    the union of the phrases' postings — same amortization move as batched
-    BM25. Rows stay unique per (query_id, doc_id, start, offset) by the
-    same argument as the single-phrase path (offset determines pos), so
-    count(*) == the phrase's offset count detects a full vote."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    if any(not ph for _, ph in phrases):
-        raise ValueError("phrase must be non-empty")
-    spark = pp.sparkSession
-    qp = spark.createDataFrame(
-        [(qid, t, i) for qid, ph in phrases for i, t in enumerate(ph)],
-        "query_id long, term string, offset int",
-    )
-    need = spark.createDataFrame(
-        [(qid, len(ph)) for qid, ph in phrases], "query_id long, n_need int"
-    )
-    starts = pp.join(F.broadcast(qp), "term").select(
-        "query_id", "doc_id", (F.col("pos") - F.col("offset")).alias("start")
-    )
-    return (
-        starts.groupBy("query_id", "doc_id", "start")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-        .join(F.broadcast(need), "query_id")
-        .filter(F.col("n_hit") == F.col("n_need"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("occurrences"))
-    )
-
-
 def phrase_match_stored_batch(
     positional_blocks: DataFrame,
     phrases: list[tuple[int, list[str]]],

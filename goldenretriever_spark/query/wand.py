@@ -26,7 +26,7 @@ lookup into a partition-pruned parquet scan.
 
 from __future__ import annotations
 
-import os
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1
-from goldenretriever_spark.query.bm25 import idf_col, query_terms_df
+from goldenretriever_spark.query.bm25 import idf_col, terms_frame, tokenize_batch
 
 def _decode_scored(
     matched: DataFrame, avgdl: float, allowed_bc=None, repartition_q: bool = False
@@ -108,24 +108,75 @@ def _decode_scored(
     return decoded.groupBy("query_id", "doc_id").agg(F.sum("c").alias("score"))
 
 
-def _bucket_ids(
-    queries, tokenizer: str, qterms: DataFrame, n_term_buckets: int
-) -> list[int]:
-    """Distinct term_bucket ids for a query batch. List-typed batches use
-    the pytest-locked driver-side XXH64 twin (goldenretriever_spark/xxh64.py)
-    — zero Spark jobs; DataFrame batches fall back to one tiny distinct+
-    collect over qterms (term set unknown on the driver)."""
-    toksets = _driver_side_toksets(queries, tokenizer)
-    if toksets is not None:
+class _Batch(NamedTuple):
+    """A query batch prepared once for the stored-index scorers."""
+
+    terms: dict[int, list[str]]  # query_id -> unique terms, first-seen order
+    qterms: DataFrame  # (query_id, term) rows of ``terms``
+    n_docs: int
+    avgdl: float
+    blocks: DataFrame  # posting blocks, bucket-pruned when the count is known
+
+    @property
+    def max_terms(self) -> int:
+        return max((len(ts) for ts in self.terms.values()), default=0)
+
+
+def _prepare(
+    spark: SparkSession,
+    posting_blocks: DataFrame,
+    corpus_stats: DataFrame,
+    queries,
+    tokenizer: str,
+    n_term_buckets: int | None,
+    stats: tuple[int, float] | None,
+) -> _Batch:
+    """All input work of a stored top-k call, done once: tokenize the batch
+    on the driver (oracle twin, zero Spark jobs), build the (query_id, term)
+    frame from that tokenization, resolve (n_docs, avgdl) — one tiny job
+    unless the caller holds ``stats`` (StoredIndex memoizes it per handle)
+    — and prune term buckets with the driver-side XXH64 twin (xxh64.py).
+
+    ``n_term_buckets`` must be the BUILD-time bucket count — pass
+    ``StoredIndex(spark, path).n_term_buckets`` (persisted in the index's
+    ``_meta``). None skips partition pruning: a wrong guess would silently
+    drop buckets and return incomplete top-k."""
+    if not isinstance(queries, list):
+        raise TypeError(
+            "queries must be a list of (query_id, query_str), "
+            f"not {type(queries).__name__}"
+        )
+    terms = tokenize_batch(queries, tokenizer)
+    if stats is None:
+        row = corpus_stats.collect()[0]
+        stats = (int(row["n_docs"]), float(row["avgdl"]))
+    if n_term_buckets and "term_bucket" in posting_blocks.columns:
         from goldenretriever_spark.xxh64 import term_buckets
 
-        return term_buckets({t for ts in toksets.values() for t in ts}, n_term_buckets)
-    return [
-        r["b"]
-        for r in qterms.select(
-            F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int").alias("b")
-        ).distinct().collect()
-    ]
+        buckets = term_buckets({t for ts in terms.values() for t in ts}, n_term_buckets)
+        posting_blocks = posting_blocks.filter(F.col("term_bucket").isin(buckets))
+    return _Batch(terms, terms_frame(spark, terms), *stats, posting_blocks)
+
+
+def _score(spark: SparkSession, batch: _Batch, allowed_bc) -> DataFrame:
+    """(query_id, doc_id, score) over every candidate doc of a prepared batch."""
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # Wide-batch single-exchange plan (see bm25.top_k) ONLY when the batch
+    # is wide AND the per-query decode volume is provably small: clustering
+    # on query_id gives at most n_queries parallel chunks with no map-side
+    # pre-aggregation, which LOST to the uniform (q,d) exchange at the
+    # 3.84M-doc scale point (BENCH/R7_SCALE.json qlen1 cell) while winning
+    # at bench scale. Bound: Σdf per query ≤ max_terms × n_docs, zero jobs.
+    wide = (
+        len(batch.terms) >= P
+        and batch.max_terms * batch.n_docs <= WIDE_BATCH_MAX_ROWS_PER_QUERY
+    )
+    matched = batch.blocks.join(F.broadcast(batch.qterms), "term").withColumn(
+        "idf", idf_col(F.lit(float(batch.n_docs)), F.col("df").cast("double"))
+    )
+    return _decode_scored(
+        matched, batch.avgdl, allowed_bc=allowed_bc, repartition_q=wide
+    )
 
 
 def stored_score_candidates(
@@ -135,7 +186,6 @@ def stored_score_candidates(
     queries,
     tokenizer: str = "simple",
     n_term_buckets: int | None = None,
-    qterms: DataFrame | None = None,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
 ) -> DataFrame:
@@ -146,81 +196,10 @@ def stored_score_candidates(
     ranking, explain-style attribution) build on this; brute_top_k_stored
     is exactly this + a window top-k. ``allowed_bc``: boolean-filter doc-id
     pushdown, see :func:`_decode_scored`."""
-    if stats is None:
-        row = corpus_stats.collect()[0]
-        stats = (int(row["n_docs"]), float(row["avgdl"]))
-    n_docs, avgdl = stats
-    if qterms is None:
-        qterms = query_terms_df(spark, queries, tokenizer)
-    if n_term_buckets and "term_bucket" in posting_blocks.columns:
-        posting_blocks = posting_blocks.filter(
-            F.col("term_bucket").isin(
-                _bucket_ids(queries, tokenizer, qterms, n_term_buckets)
-            )
-        )
-    n_queries = max_terms = None
-    if not isinstance(queries, DataFrame) and queries is not None:
-        toksets = _driver_side_toksets(queries, tokenizer)
-        n_queries = len(toksets)
-        max_terms = max((len(ts) for ts in toksets.values()), default=0)
-    elif qterms is not None:
-        n_queries = getattr(qterms, "_gr_n_queries", None)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Wide-batch single-exchange plan (see bm25.top_k) ONLY when the batch
-    # is wide AND the per-query decode volume is provably small: clustering
-    # on query_id gives at most n_queries parallel chunks with no map-side
-    # pre-aggregation, which LOST to the uniform (q,d) exchange at the
-    # 3.84M-doc scale point (BENCH/R7_SCALE.json qlen1 cell) while winning
-    # at bench scale. Bound: Σdf per query ≤ max_terms × n_docs, zero jobs.
-    wide = (
-        n_queries is not None
-        and n_queries >= P
-        and max_terms is not None
-        and max_terms * n_docs <= WIDE_BATCH_MAX_ROWS_PER_QUERY
+    batch = _prepare(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
     )
-    matched = posting_blocks.join(F.broadcast(qterms), "term").withColumn(
-        "idf", idf_col(F.lit(float(n_docs)), F.col("df").cast("double"))
-    )
-    return _decode_scored(
-        matched, avgdl, allowed_bc=allowed_bc, repartition_q=wide
-    )
-
-
-def brute_top_k_stored(
-    spark: SparkSession,
-    posting_blocks: DataFrame,
-    corpus_stats: DataFrame,
-    queries,
-    k: int = 10,
-    tokenizer: str = "simple",
-    n_term_buckets: int | None = None,
-    qterms: DataFrame | None = None,
-    stats: tuple[int, float] | None = None,
-    allowed_bc=None,
-    quantize: bool = False,
-) -> DataFrame:
-    """Exact top-k over the STORED index with NO pruning: decode every block
-    of every query term, score, rank. ``quantize=True`` cuts at k by the
-    engine-wide x10000-quantized score with doc_id-asc ties (the oracle
-    discipline — used by filtered_top_k so its two plans agree exactly even
-    when quantized ties are dense near the k boundary). This is the baseline wand_top_k must
-    beat — same storage, same decode path, identical results; the only
-    difference is the θ-pruning machinery (tools/wand_crossover.py measures
-    where pruning starts paying for itself). ``qterms`` lets a caller that
-    already tokenized the batch (the dispatcher) pass it through; ``stats``
-    is a pre-collected (n_docs, avgdl) so the dispatcher's corpus_stats read
-    is not repeated here."""
-    scores = stored_score_candidates(
-        spark, posting_blocks, corpus_stats, queries, tokenizer=tokenizer,
-        n_term_buckets=n_term_buckets, qterms=qterms, stats=stats,
-        allowed_bc=allowed_bc,
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(*_rank_order(quantize))
-    return (
-        scores.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return _score(spark, batch, allowed_bc)
 
 
 def _rank_order(quantize: bool):
@@ -232,6 +211,46 @@ def _rank_order(quantize: bool):
             F.asc("doc_id"),
         )
     return (F.desc("score"), F.asc("doc_id"))
+
+
+def _brute(
+    spark: SparkSession, batch: _Batch, k: int, allowed_bc, quantize: bool
+) -> DataFrame:
+    scores = _score(spark, batch, allowed_bc)
+    w_rank = Window.partitionBy("query_id").orderBy(*_rank_order(quantize))
+    return (
+        scores.withColumn("rank", F.row_number().over(w_rank))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "doc_id", "score", "rank")
+    )
+
+
+def brute_top_k_stored(
+    spark: SparkSession,
+    posting_blocks: DataFrame,
+    corpus_stats: DataFrame,
+    queries,
+    k: int = 10,
+    tokenizer: str = "simple",
+    n_term_buckets: int | None = None,
+    stats: tuple[int, float] | None = None,
+    allowed_bc=None,
+    quantize: bool = False,
+) -> DataFrame:
+    """Exact top-k over the STORED index with NO pruning: decode every block
+    of every query term, score, rank. ``quantize=True`` cuts at k by the
+    engine-wide x10000-quantized score with doc_id-asc ties (the oracle
+    discipline — used by filtered_top_k so its two plans agree exactly even
+    when quantized ties are dense near the k boundary). This is the baseline
+    wand_top_k must beat — same storage, same decode path, identical
+    results; the only difference is the θ-pruning machinery
+    (tools/wand_crossover.py measures where pruning starts paying for
+    itself). ``stats`` is a pre-collected (n_docs, avgdl) that skips the
+    corpus_stats read."""
+    batch = _prepare(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
+    )
+    return _brute(spark, batch, k, allowed_bc, quantize)
 
 
 # Measured brute-stored vs WAND crossover on the bench host, in estimated
@@ -257,7 +276,7 @@ WAND_CROSSOVER_DECODE_ROWS = 4_500_000
 # The batch MEAN was the r4 signal and misroutes skewed batches — a 25/25
 # one-term/five-term mix has mean 3.9 M (< crossover -> brute, 87.7 s)
 # while forced WAND runs 50.0 s because the heavy half dominates runtime
-# (BENCH/WAND_MIXED.json). Overridable via $SPARK_GRAFT_WAND_HEAVY_SHARE.
+# (BENCH/WAND_MIXED.json).
 WAND_HEAVY_SHARE_MIN = 0.2
 
 # Wide-batch single-exchange scoring (repartition(query_id) serving both the
@@ -269,42 +288,6 @@ WAND_HEAVY_SHARE_MIN = 0.2
 WIDE_BATCH_MAX_ROWS_PER_QUERY = 2_000_000
 
 
-def estimate_decode_rows(posting_blocks: DataFrame, qterms: DataFrame) -> DataFrame:
-    """Per-query estimated decode volume: Σ df over the query's distinct
-    terms == exactly the postings an unpruned stored-index scan decodes.
-    Metadata-only: reads (term, df) from the (bucket-pruned) blocks scan —
-    parquet column pruning keeps the blob columns untouched. LEFT join with
-    df coalesced to 0 (ADVICE r4): every query with at least one token
-    contributes a row (a query tokenizing to ZERO terms has no qterms rows
-    and is absent here — harmless, it returns nothing on any path), so a
-    batch mixing no-HIT queries with heavy ones does not overstate the
-    volume signal and misroute to WAND."""
-    tdf = (
-        posting_blocks.select("term", "df")
-        .groupBy("term")
-        .agg(F.first("df").alias("df"))
-    )
-    return (
-        qterms.join(tdf, "term", "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("df"), F.lit(0))).alias("est_rows"))
-    )
-
-
-def _driver_side_toksets(queries, tokenizer: str) -> dict | None:
-    """For list-typed batches, the per-query UNIQUE term sets computed on the
-    driver with the oracle twin of the engine tokenizer — ZERO Spark jobs.
-    The twins are equality-tested on every input class (tests/test_round2),
-    so the term COUNT bound derived here is exactly what query_terms_df would
-    produce. Returns None for DataFrame inputs (unknown size; tokenize
-    distributed instead)."""
-    if isinstance(queries, DataFrame):
-        return None
-    from goldenretriever_spark.oracle import tokenize
-
-    return {int(qid): set(tokenize(qstr, tokenizer)) for qid, qstr in queries}
-
-
 def dispatch_top_k(
     spark: SparkSession,
     posting_blocks: DataFrame,
@@ -312,235 +295,94 @@ def dispatch_top_k(
     queries,
     k: int = 10,
     tokenizer: str = "simple",
-    seed_factor: int = 4,
     n_term_buckets: int | None = None,
-    crossover_rows: int | None = None,
-    split: bool = False,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
     term_df_cache: dict | None = None,
     quantize: bool = False,
 ) -> tuple[DataFrame, dict]:
     """Top-k over the stored index with brute-stored vs WAND auto-dispatch.
+    Returns ``(result, plan)``; ``plan`` records the route and its inputs.
 
     ``allowed_bc`` (boolean-filter doc-id pushdown, see
     :func:`_decode_scored`) threads through whichever path is routed, so a
     filtered query reuses the measured brute/WAND dispatch unchanged
     (query/boolean.filtered_top_k).
 
-    Always returns ``(result, plan)`` — the stable-shape API (ADVICE r4);
-    ``top_k_auto`` is the thin wrapper for callers that only want the frame.
-
     Both paths answer from the same compressed blocks and are rank-identical
     (tests/test_wand.py); the ONLY difference is whether the θ-pruning
     machinery pays for itself. The dispatch signal is estimated decode
-    volume (Σ df over each query's terms, from the blocks metadata): a
-    query is HEAVY when its volume clears the measured
-    ``WAND_CROSSOVER_DECODE_ROWS``, and the whole batch routes to WAND
-    when the heavy queries hold at least ``WAND_HEAVY_SHARE_MIN`` of the
-    batch's total volume (see both constants' notes for the calibration;
-    heavy-dominated batches are where pruning pays, and the volume SHARE —
-    unlike the r4 batch mean — routes skewed mixes correctly). The plan
-    records mean/max volume, per-query above/below counts and the heavy
-    share. Thresholds overridable per call or via
-    $SPARK_GRAFT_WAND_CROSSOVER_ROWS / $SPARK_GRAFT_WAND_HEAVY_SHARE.
-
-    ``split=True`` instead routes EACH query to its own winning path and
-    unions the two results. Measured and rejected as the default
-    (BENCH/WAND_MIXED.json, 3.84 M docs): even on a designed 50/50
-    one-term/five-term batch the split ran 0.62-0.67× of EITHER forced
-    single path, because one-path batched execution amortizes the blocks
-    scan, decode and ranking machinery across the whole batch while the
-    split serializes two job sets — and WAND's penalty on the low-volume
-    half (0.87-0.97×) is far smaller than that amortization loss. Kept as
-    an explicit opt-in for re-measurement on other hosts/workloads.
+    volume (Σ df over each query's terms): a query is HEAVY when its volume
+    clears the measured ``WAND_CROSSOVER_DECODE_ROWS``, and the whole batch
+    routes to WAND when the heavy queries hold at least
+    ``WAND_HEAVY_SHARE_MIN`` of the batch's total volume (see both
+    constants' notes for the calibration; one-path batched execution
+    amortizes the blocks scan, decode and ranking machinery across every
+    query, and the volume SHARE — unlike the r4 batch mean — routes skewed
+    mixes correctly). The plan records mean/max volume, per-query
+    above/below counts and the heavy share.
 
     Fixed-overhead control on the hot serving row:
-    - corpus_stats is collected ONCE here and handed to the routed path(s);
-      a caller holding the (n_docs, avgdl) tuple already (StoredIndex
-      memoizes it per handle) passes ``stats=`` and skips even that job.
-    - for list-typed batches the max-terms bound comes from driver-side
-      tokenization (oracle twin) — no Spark job.
+    - the batch is prepared once (:func:`_prepare`) and the routed path
+      reuses its tokenization, term frame, stats and pruned blocks.
     - the df probe is skipped when the driver-side upper bound
-      (max terms/query × n_docs) already rules WAND out, and in that case
-      qterms is NOT localCheckpoint-ed (single consumer — the brute path).
+      (max terms/query × n_docs) already rules WAND out.
+    - otherwise df is read through ``term_df_cache`` (a term -> df memo;
+      StoredIndex keeps one per handle, VERDICT r6 #4): only terms not yet
+      seen are probed, so a repeated vocabulary (interactive serve, the
+      hybrid lexical leg) routes with zero probe jobs. Without a memo the
+      probe uses a call-local one. Absent terms are cached as df=0.
     """
-    if crossover_rows is None:
-        crossover_rows = int(
-            os.environ.get(
-                "SPARK_GRAFT_WAND_CROSSOVER_ROWS", WAND_CROSSOVER_DECODE_ROWS
-            )
-        )
-    if stats is None:
-        row = corpus_stats.collect()[0]
-        stats = (int(row["n_docs"]), float(row["avgdl"]))
-    n_docs = stats[0]
-
-    toksets = _driver_side_toksets(queries, tokenizer)
-    qterms_all: DataFrame | None = None  # built lazily; checkpointed only if reused
-
-    if n_term_buckets and "term_bucket" in posting_blocks.columns:
-        if toksets is not None:
-            # distinct terms known driver-side -> bucket ids from the
-            # XXH64 twin (xxh64.py), zero Spark jobs
-            from goldenretriever_spark.xxh64 import term_buckets
-
-            buckets = term_buckets(
-                {t for ts in toksets.values() for t in ts}, n_term_buckets
-            )
-        else:
-            qterms_all = query_terms_df(spark, queries, tokenizer).localCheckpoint(
-                eager=True
-            )
-            buckets = [
-                r["b"]
-                for r in qterms_all.select(
-                    F.pmod(F.xxhash64("term"), F.lit(n_term_buckets))
-                    .cast("int")
-                    .alias("b")
-                ).distinct().collect()
-            ]
-        pruned = posting_blocks.filter(F.col("term_bucket").isin(buckets))
-    else:
-        pruned = posting_blocks
+    batch = _prepare(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
+    )
+    crossover = WAND_CROSSOVER_DECODE_ROWS
+    max_terms = batch.max_terms
+    plan: dict = {
+        "crossover_rows": crossover,
+        "n_docs": batch.n_docs,
+        "max_terms_per_query": max_terms,
+    }
 
     # driver-side bound: Σdf per query ≤ (terms in query) × n_docs; if even
     # the largest query cannot reach the crossover, skip the blocks probe
-    if toksets is not None:
-        max_terms = max((len(ts) for ts in toksets.values()), default=0)
-    else:
-        if qterms_all is None:
-            qterms_all = query_terms_df(spark, queries, tokenizer).localCheckpoint(
-                eager=True
-            )
-        per_q = qterms_all.groupBy("query_id").agg(F.count("*").alias("nt")).collect()
-        max_terms = max((r["nt"] for r in per_q), default=0)
-    plan: dict = {
-        "crossover_rows": crossover_rows,
-        "n_docs": n_docs,
-        "max_terms_per_query": int(max_terms),
-    }
-
-    if max_terms * n_docs < crossover_rows:
-        # probe skipped: single consumer ahead, keep qterms a lazy plan
+    if max_terms * batch.n_docs < crossover:
         plan.update({"path": "brute_stored", "probed": False})
-        if qterms_all is None:
-            qterms_all = query_terms_df(spark, queries, tokenizer)
-        out = brute_top_k_stored(
-            spark, pruned, corpus_stats, queries, k=k,
-            tokenizer=tokenizer, n_term_buckets=None, qterms=qterms_all, stats=stats,
-            allowed_bc=allowed_bc, quantize=quantize,
-        )
-        return out, plan
+        return _brute(spark, batch, k, allowed_bc, quantize), plan
 
-    if qterms_all is None and (toksets is None or term_df_cache is None):
-        # several consumers from here (probe + routed paths) -> materialize
-        qterms_all = query_terms_df(spark, queries, tokenizer).localCheckpoint(
-            eager=True
-        )
-    if toksets is not None and term_df_cache is not None:
-        # per-handle df memo (VERDICT r6 #4): probe ONLY terms not yet seen
-        # by this handle — a repeated term vocabulary (interactive serve,
-        # the hybrid lexical leg) pays the metadata probe once, later calls
-        # route with zero probe jobs. Missing terms are cached as df=0,
-        # matching estimate_decode_rows' left-join coalesce semantics.
-        unknown = sorted(
-            {t for ts in toksets.values() for t in ts} - term_df_cache.keys()
-        )
-        if unknown:
-            found = {
-                r["term"]: int(r["df"])
-                for r in pruned.select("term", "df")
-                .filter(F.col("term").isin(unknown))
-                .groupBy("term")
-                .agg(F.first("df").alias("df"))
-                .collect()
-            }
-            for t in unknown:
-                term_df_cache[t] = found.get(t, 0)
-        est_rows = {
-            qid: sum(term_df_cache[t] for t in ts) for qid, ts in toksets.items()
+    df = term_df_cache if term_df_cache is not None else {}
+    unknown = sorted({t for ts in batch.terms.values() for t in ts} - df.keys())
+    if unknown:
+        found = {
+            r["term"]: int(r["df"])
+            for r in batch.blocks.select("term", "df")
+            .filter(F.col("term").isin(unknown))
+            .groupBy("term")
+            .agg(F.first("df").alias("df"))
+            .collect()
         }
-    else:
-        est_rows = {
-            r["query_id"]: int(r["est_rows"])
-            for r in estimate_decode_rows(pruned, qterms_all).collect()
-        }
-    above = [q for q, v in est_rows.items() if v >= crossover_rows]
-    below = [q for q, v in est_rows.items() if v < crossover_rows]
-    vals = list(est_rows.values())
-    total = sum(vals)
-    heavy = sum(est_rows[q] for q in above)
-    heavy_share = heavy / total if total else 0.0
-    share_min = float(
-        os.environ.get("SPARK_GRAFT_WAND_HEAVY_SHARE", WAND_HEAVY_SHARE_MIN)
-    )
+        for t in unknown:
+            df[t] = found.get(t, 0)
+    est_rows = [sum(df[t] for t in ts) for ts in batch.terms.values()]
+    heavy = [v for v in est_rows if v >= crossover]
+    total = sum(est_rows)
+    heavy_share = sum(heavy) / total if total else 0.0
     plan.update(
         {
             "probed": True,
-            "est_rows_mean": round(total / len(vals)) if vals else 0,
-            "est_rows_max": max(vals, default=0),
-            "n_above": len(above),
-            "n_below": len(below),
+            "est_rows_mean": round(total / len(est_rows)) if est_rows else 0,
+            "est_rows_max": max(est_rows, default=0),
+            "n_above": len(heavy),
+            "n_below": len(est_rows) - len(heavy),
             "heavy_volume_share": round(heavy_share, 3),
-            "heavy_share_min": share_min,
+            "heavy_share_min": WAND_HEAVY_SHARE_MIN,
         }
     )
-
-    def run_wand(qt: DataFrame) -> DataFrame:
-        return wand_top_k(
-            spark, pruned, corpus_stats, queries, k=k,
-            tokenizer=tokenizer, seed_factor=seed_factor, n_term_buckets=None,
-            qterms=qt, stats=stats, allowed_bc=allowed_bc, quantize=quantize,
-        )
-
-    def run_brute(qt: DataFrame) -> DataFrame:
-        return brute_top_k_stored(
-            spark, pruned, corpus_stats, queries, k=k,
-            tokenizer=tokenizer, n_term_buckets=None, qterms=qt, stats=stats,
-            allowed_bc=allowed_bc, quantize=quantize,
-        )
-
-    if not split or not above or not below:
-        # one path for the whole batch, routed by heavy-volume share —
-        # batched one-path execution amortizes scan/decode/rank machinery
-        # across every query (see the split docstring for the measurement)
-        if heavy_share >= share_min:
-            plan["path"] = "wand"
-            return run_wand(qterms_all), plan
-        plan["path"] = "brute_stored"
-        return run_brute(qterms_all), plan
-    plan["path"] = "split"
-    if qterms_all is None:
-        qterms_all = query_terms_df(spark, queries, tokenizer)
-    wand_out = run_wand(qterms_all.filter(F.col("query_id").isin(above)))
-    brute_out = run_brute(qterms_all.filter(F.col("query_id").isin(below)))
-    return wand_out.unionByName(brute_out), plan
-
-
-def top_k_auto(
-    spark: SparkSession,
-    posting_blocks: DataFrame,
-    corpus_stats: DataFrame,
-    queries,
-    k: int = 10,
-    tokenizer: str = "simple",
-    seed_factor: int = 4,
-    n_term_buckets: int | None = None,
-    crossover_rows: int | None = None,
-    return_plan: bool = False,
-    split: bool = False,
-) -> DataFrame:
-    """Thin wrapper over :func:`dispatch_top_k` (which see for dispatch
-    semantics). Returns the result frame; ``return_plan=True`` returns
-    ``(result, plan)``. Call sites that toggle the flag dynamically should
-    call ``dispatch_top_k`` directly — its return shape never changes."""
-    out, plan = dispatch_top_k(
-        spark, posting_blocks, corpus_stats, queries, k=k, tokenizer=tokenizer,
-        seed_factor=seed_factor, n_term_buckets=n_term_buckets,
-        crossover_rows=crossover_rows, split=split,
-    )
-    return (out, plan) if return_plan else out
+    if heavy_share >= WAND_HEAVY_SHARE_MIN:
+        plan["path"] = "wand"
+        return _wand(spark, batch, k, allowed_bc, quantize), plan
+    plan["path"] = "brute_stored"
+    return _brute(spark, batch, k, allowed_bc, quantize), plan
 
 
 def wand_top_k(
@@ -552,7 +394,6 @@ def wand_top_k(
     tokenizer: str = "simple",
     seed_factor: int = 4,
     n_term_buckets: int | None = None,
-    qterms: DataFrame | None = None,
     stats: tuple[int, float] | None = None,
     allowed_bc=None,
     quantize: bool = False,
@@ -574,31 +415,22 @@ def wand_top_k(
     necessary at 3.84M docs where quantized ties near the k boundary are
     dense (BENCH/R7_SCALE.json filtered cell).
 
-    ``n_term_buckets`` must be the BUILD-time bucket count — pass
-    ``StoredIndex(spark, path).n_term_buckets`` (persisted in the index's
-    ``_meta``). The default is None (no partition pruning): a wrong guess
-    would silently drop buckets and return incomplete top-k, so pruning is
-    opt-in with the persisted value only. ``qterms``: pre-tokenized batch
-    pass-through (the dispatcher supplies it; avoids re-tokenizing).
-    ``stats``: pre-collected (n_docs, avgdl), same contract as
-    brute_top_k_stored.
+    ``n_term_buckets`` and ``stats``: see :func:`_prepare`.
     """
-    if stats is None:
-        row = corpus_stats.collect()[0]
-        stats = (int(row["n_docs"]), float(row["avgdl"]))
-    n_docs, avgdl = stats
+    batch = _prepare(
+        spark, posting_blocks, corpus_stats, queries, tokenizer, n_term_buckets, stats
+    )
+    return _wand(spark, batch, k, allowed_bc, quantize, seed_factor)
 
-    if qterms is None:
-        qterms = query_terms_df(spark, queries, tokenizer)
 
-    if n_term_buckets and "term_bucket" in posting_blocks.columns:
-        # partition pruning: only scan buckets that contain a query term
-        posting_blocks = posting_blocks.filter(
-            F.col("term_bucket").isin(
-                _bucket_ids(queries, tokenizer, qterms, n_term_buckets)
-            )
-        )
-
+def _wand(
+    spark: SparkSession,
+    batch: _Batch,
+    k: int,
+    allowed_bc,
+    quantize: bool,
+    seed_factor: int = 4,
+) -> DataFrame:
     # metadata-only plan: the cached frame carries block STATS, never the
     # varint blobs — at 10^12-file scale the matched blobs of one hot term
     # are TBs, while their metadata is ~100 B/block. Parquet column pruning
@@ -607,13 +439,15 @@ def wand_top_k(
     meta_cols = ["term", "block_id", "n", "df", "block_max_tf_norm"]
     blob_cols = ["term", "block_id", "doc_ids_delta_varint", "tfs_varint", "dls_varint"]
     meta = (
-        posting_blocks.select(*meta_cols)
-        .join(F.broadcast(qterms), "term")
-        .withColumn("idf", idf_col(F.lit(float(n_docs)), F.col("df").cast("double")))
+        batch.blocks.select(*meta_cols)
+        .join(F.broadcast(batch.qterms), "term")
+        .withColumn(
+            "idf", idf_col(F.lit(float(batch.n_docs)), F.col("df").cast("double"))
+        )
         .withColumn("ub", F.col("idf") * F.col("block_max_tf_norm"))
     )
     meta = meta.cache()
-    blobs = posting_blocks.select(*blob_cols)
+    blobs = batch.blocks.select(*blob_cols)
 
     def decode_keys(keys: DataFrame, broadcast_keys: bool) -> DataFrame:
         """(query_id, term, idf, block_id) -> (query_id, doc_id, score),
@@ -625,7 +459,7 @@ def wand_top_k(
         if broadcast_keys:
             sel = F.broadcast(sel)
         return _decode_scored(
-            blobs.join(sel, ["term", "block_id"]), avgdl, allowed_bc=allowed_bc
+            blobs.join(sel, ["term", "block_id"]), batch.avgdl, allowed_bc=allowed_bc
         )
 
     try:
@@ -657,8 +491,6 @@ def wand_top_k(
             .filter(F.col("rn") == k)
             .select("query_id", F.col("score").alias("theta"))
         )
-        # schema comes from the plan, not a DDL literal: callers may pass a
-        # queries DataFrame whose query_id is not long
         theta = spark.createDataFrame(theta_sel.collect(), theta_sel.schema)
 
         # ---- phase 2: prune blocks, decode survivors, exact-score ----

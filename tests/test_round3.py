@@ -143,8 +143,9 @@ def test_jdbc_option_plumbing():
 
 
 def test_stored_index_search_dispatch(spark, tmp_path):
-    """StoredIndex.search = write_index -> top_k_auto with the persisted
-    bucket count; must equal the in-memory brute ranking."""
+    """StoredIndex.search = write_index -> dispatch_top_k with the persisted
+    bucket count; must equal the in-memory brute ranking and the oracle's
+    top-k, also for edge-case inputs."""
     import math
 
     from goldenretriever_spark import corpus
@@ -173,6 +174,37 @@ def test_stored_index_search_dispatch(spark, tmp_path):
     assert [g[:3] for g in got] == [w[:3] for w in want]
     for g, w in zip(got, want):
         assert math.isclose(g[3], w[3], rel_tol=1e-9)
+
+    # edge-case inputs against the oracle: an empty query, a query of
+    # absent terms, k above every query's match count (200 docs), and one
+    # batch mixing them with normal queries
+    from goldenretriever_spark.index.build import with_doc_ids
+    from goldenretriever_spark.oracle import build_oracle_index
+    from goldenretriever_spark.oracle import top_k as oracle_top_k
+
+    oidx = build_oracle_index(
+        [(r["doc_id"], r["content"]) for r in with_doc_ids(docs).collect()]
+    )
+    empty, absent = (2, ""), (3, "zzqxv qqjwk")
+    assert not any(t in oidx.postings for t in absent[1].split())
+    for batch, k in (
+        ([empty], 5),
+        ([absent], 5),
+        (qlist, 500),
+        ([qlist[0], empty, absent, qlist[1]], 500),
+    ):
+        rows = stored.search(batch, k=k).collect()
+        for qid, qstr in batch:
+            got = sorted(
+                (r["rank"], r["doc_id"], r["score"]) for r in rows
+                if r["query_id"] == qid
+            )
+            want = oracle_top_k(oidx, qstr, k=k)
+            assert [d for _, d, _ in got] == [d for d, _ in want], (qid, k)
+            assert [r for r, _, _ in got] == list(range(1, len(want) + 1))
+            for (_, _, sg), (_, sw) in zip(got, want):
+                assert math.isclose(sg, sw, rel_tol=1e-9)
+        assert {r["query_id"] for r in rows} <= {qid for qid, _ in batch}
 
 
 def test_probe_masks_radius():

@@ -111,6 +111,7 @@ def test_filtered_topk_wand_route_matches_brute(spark, monkeypatch):
     """Forcing the dispatcher to the WAND route (crossover=1 -> every query
     heavy) under the filter pushdown returns the same filtered top-k: θ
     seeded from filtered partials is a valid pruning threshold."""
+    from goldenretriever_spark.query import wand
     from goldenretriever_spark.query.boolean import filtered_top_k
 
     idx, blocks, queries = _filtered_fixture(spark)
@@ -118,7 +119,7 @@ def test_filtered_topk_wand_route_matches_brute(spark, monkeypatch):
     baseline = filtered_top_k(
         spark, blocks, idx.corpus_stats, queries, k=5, pushdown=False, **kw
     )
-    monkeypatch.setenv("SPARK_GRAFT_WAND_CROSSOVER_ROWS", "1")
+    monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", 1)
     wand_route = filtered_top_k(
         spark, blocks, idx.corpus_stats, queries, k=5, pushdown=True, **kw
     )

@@ -89,10 +89,20 @@ def test_wand_prunes_something(built, spark):
     assert res.count() == 5
 
 
-def test_top_k_auto_dispatch_both_sides(built, spark):
-    """top_k_auto must be rank-identical to brute force on BOTH sides of the
-    crossover threshold (the dispatch changes the plan, never the answer)."""
-    from goldenretriever_spark.query.wand import top_k_auto
+def _df_sums(idx, qlist):
+    """Per-query Σdf over the query's unique terms, from term_stats on the
+    driver — the decode volume an unpruned stored-index scan pays."""
+    from goldenretriever_spark.oracle import tokenize
+
+    df = {r["term"]: r["df"] for r in idx.term_stats.collect()}
+    return {qid: sum(df.get(t, 0) for t in set(tokenize(q))) for qid, q in qlist}
+
+
+def test_dispatch_top_k_both_sides(built, spark, monkeypatch):
+    """dispatch_top_k must be rank-identical to brute force on BOTH sides of
+    the crossover threshold (the dispatch changes the plan, never the
+    answer)."""
+    from goldenretriever_spark.query import wand
 
     idx, blocks = built
     queries = corpus.reference_queries(15, seed=7)
@@ -100,14 +110,11 @@ def test_top_k_auto_dispatch_both_sides(built, spark):
     terms = bm25.query_terms_df(spark, qlist)
     brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
     # decode-rows crossover above any possible volume -> brute-stored path;
-    # at 0 every query clears it -> WAND path (a batch with absent-term
-    # queries would SPLIT at 1, which is its own test below); the plan
-    # record must confirm the route taken
+    # at 0 every query clears it -> WAND path; the plan record must confirm
+    # the route taken
     for crossover_rows, want_path in ((10**15, "brute_stored"), (0, "wand")):
-        out, plan = top_k_auto(
-            spark, blocks, idx.corpus_stats, qlist, k=K,
-            crossover_rows=crossover_rows, return_plan=True,
-        )
+        monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", crossover_rows)
+        out, plan = wand.dispatch_top_k(spark, blocks, idx.corpus_stats, qlist, k=K)
         assert plan["path"] == want_path, plan
         auto = _collect_ranked(out.collect())
         assert set(brute) == set(auto), f"crossover_rows={crossover_rows}"
@@ -119,14 +126,14 @@ def test_top_k_auto_dispatch_both_sides(built, spark):
                 assert math.isclose(sb, sp, rel_tol=1e-9)
 
 
-def test_dispatch_is_volume_aware(built, spark):
+def test_dispatch_is_volume_aware(built, spark, monkeypatch):
     """VERDICT r3 #2: the dispatcher keys on estimated decode volume
-    (batch-mean Σdf per query), not corpus size — at the SAME index, a
-    1-term batch and a 5-term batch must route to different paths when the
-    threshold sits between their mean decode volumes; the plan's per-query
-    diagnostic counts (n_above/n_below) must equal the per-query est-rows
+    (Σdf per query), not corpus size — at the SAME index, a 1-term batch
+    and a 5-term batch must route to different paths when the threshold
+    sits between their mean decode volumes; the plan's per-query
+    diagnostic counts (n_above/n_below) must equal the per-query Σdf
     verdicts."""
-    from goldenretriever_spark.query.wand import dispatch_top_k, estimate_decode_rows
+    from goldenretriever_spark.query import wand
 
     idx, blocks = built
     mean_rows = {}
@@ -136,8 +143,7 @@ def test_dispatch_is_volume_aware(built, spark):
         qs = corpus.fixed_length_queries(20, n_terms=qlen, seed=3)
         qlist = [(int(r.query_id), r.query_str) for r in qs.itertuples()]
         batches[qlen] = qlist
-        est = estimate_decode_rows(blocks, bm25.query_terms_df(spark, qlist))
-        rows = {r["query_id"]: int(r["est_rows"]) for r in est.collect()}
+        rows = _df_sums(idx, qlist)
         per_query[qlen] = rows
         mean_rows[qlen] = sum(rows.values()) / len(rows)
     assert mean_rows[1] < mean_rows[5]
@@ -151,13 +157,11 @@ def test_dispatch_is_volume_aware(built, spark):
         per_query[5].values()
     )
     assert share5 >= 0.2, f"generator drift: 5-term heavy share {share5}"
+    monkeypatch.setattr(wand, "WAND_CROSSOVER_DECODE_ROWS", threshold)
 
     paths = {}
     for qlen, qlist in batches.items():
-        out, plan = dispatch_top_k(
-            spark, blocks, idx.corpus_stats, qlist, k=K,
-            crossover_rows=threshold,
-        )
+        out, plan = wand.dispatch_top_k(spark, blocks, idx.corpus_stats, qlist, k=K)
         paths[qlen] = plan["path"]
         if plan["probed"]:
             want_above = sum(1 for v in per_query[qlen].values() if v >= threshold)
@@ -176,43 +180,24 @@ def test_dispatch_is_volume_aware(built, spark):
     assert paths == {1: "brute_stored", 5: "wand"}
 
 
-def test_mixed_batch_split_optin(built, spark):
-    """VERDICT r4 #5 correctness half: split=True routes each query to its
-    own path (plan path 'split') and the unioned result is rank-identical
-    to brute force on every query. (The PERFORMANCE half was measured at
-    3.84 M docs and rejected as the default — BENCH/WAND_MIXED.json: the
-    split ran 0.62-0.67x of either forced single path because one-path
-    batched execution amortizes the scan/decode machinery — so split stays
-    an explicit opt-in and the default routes the WHOLE batch by the share
-    of decode volume sitting in heavy queries.)"""
-    from goldenretriever_spark.query.wand import dispatch_top_k, estimate_decode_rows
+def test_batch_must_be_a_list_with_unique_ids(built, spark):
+    """A repeated query_id raises instead of scoring the two queries' terms
+    as one merged query; a non-list batch raises instead of taking an
+    untested plan."""
+    from goldenretriever_spark.query import wand
 
     idx, blocks = built
-    q1 = corpus.fixed_length_queries(10, n_terms=1, seed=3)
-    q5 = corpus.fixed_length_queries(10, n_terms=5, seed=3)
-    qlist = [(int(r.query_id), r.query_str) for r in q1.itertuples()] + [
-        (100 + int(r.query_id), r.query_str) for r in q5.itertuples()
-    ]
-    est = {
-        r["query_id"]: int(r["est_rows"])
-        for r in estimate_decode_rows(
-            blocks, bm25.query_terms_df(spark, qlist)
-        ).collect()
-    }
-    vals = sorted(est.values())
-    threshold = vals[len(vals) // 2]  # median -> both sides non-empty
-    out, plan = dispatch_top_k(
-        spark, blocks, idx.corpus_stats, qlist, k=K, crossover_rows=threshold,
-        split=True,
-    )
-    assert plan["path"] == "split", plan
-    assert plan["n_above"] == sum(1 for v in est.values() if v >= threshold)
-    assert plan["n_above"] + plan["n_below"] == len(qlist)
-    terms = bm25.query_terms_df(spark, qlist)
-    brute = _collect_ranked(bm25.top_k(idx, terms, k=K).collect())
-    auto = _collect_ranked(out.collect())
-    assert set(brute) == set(auto)
-    for qid in brute:
-        assert [d for d, _ in brute[qid]] == [d for d, _ in auto[qid]], f"q{qid}"
-        for (_, sb), (_, sp) in zip(brute[qid], auto[qid]):
-            assert math.isclose(sb, sp, rel_tol=1e-9)
+    repeated = [(1, "def return"), (2, "cache"), (1, "return class")]
+    for fn in (
+        wand.dispatch_top_k,
+        wand.brute_top_k_stored,
+        wand.wand_top_k,
+        wand.stored_score_candidates,
+    ):
+        with pytest.raises(ValueError, match="query_id 1"):
+            fn(spark, blocks, idx.corpus_stats, repeated)
+    with pytest.raises(ValueError, match="query_id 1"):
+        bm25.search(spark, idx, repeated)
+    as_frame = spark.createDataFrame(repeated[:2], "query_id long, query_str string")
+    with pytest.raises(TypeError):
+        wand.dispatch_top_k(spark, blocks, idx.corpus_stats, as_frame)
