@@ -1,4 +1,4 @@
-.PHONY: test verify bench scale scale-cluster sweep recall crossover package clean
+.PHONY: test verify bench perfbench scale scale-cluster sweep recall crossover package clean
 
 crossover:
 	python tools/wand_crossover.py 240000,960000,1920000 --runs=2
@@ -11,6 +11,10 @@ verify:
 
 bench:
 	python bench.py
+
+perfbench:       # BENCHMARK.json's benchmark: its smoke tests, then every workload (untraced, then traced)
+	python -m pytest perfbench/test_smoke.py -q
+	python3 perfbench/run.py --workload all --seed 1 --seconds 5
 
 scale:
 	python tools/scaling_bench.py

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import InvertedIndex
+from goldenretriever_spark.session import local_frame
 
 _UNSET = object()  # n_term_buckets memo sentinel (None is a valid value)
 
@@ -93,75 +94,69 @@ class StoredIndex:
         self.spark = spark
         self.path = path
         # an opened index is immutable (republication writes a new path /
-        # Iceberg snapshot), so per-handle memoization of the tiny metadata
-        # is safe — without it every search() pays 2 extra driver jobs
-        # (_meta read + corpus_stats collect), a measurable slice of
-        # single-query serve latency (BENCH/SERVE_LATENCY.json)
+        # Iceberg snapshot), so everything read from it is memoized per
+        # handle: the _meta bucket count, (n_docs, avgdl), the term -> df
+        # memo and every table's DataFrame. Re-reading a table re-runs file
+        # listing and parquet schema inference (a Spark job) at plan time;
+        # with the memo a warm search() launches no Spark job before
+        # .collect() (tests/test_plans.py).
         self._n_term_buckets: int | None | object = _UNSET
         self._stats: tuple[int, float] | None = None
-        self._posting_blocks: DataFrame | None = None
-        self._positional_blocks: DataFrame | None = None
+        self._tables: dict[str, DataFrame] = {}
         # per-handle term -> df memo for the dispatch probe (VERDICT r6 #4):
         # the index is immutable, so df values never go stale; repeated
         # vocabularies (interactive serve, hybrid lexical leg) probe once
         self._term_df: dict[str, int] = {}
 
+    def _table(self, name: str) -> DataFrame:
+        # a DataFrame is an immutable plan, so handing the same one out is safe
+        if name not in self._tables:
+            self._tables[name] = self.spark.read.parquet(os.path.join(self.path, name))
+        return self._tables[name]
+
     @property
     def posting_blocks(self) -> DataFrame:
-        # memoized: re-reading re-runs partition discovery over all the
-        # term_bucket directories at plan time, per search call. A DataFrame
-        # is an immutable plan, so handing the same one out is safe.
-        if self._posting_blocks is None:
-            self._posting_blocks = self.spark.read.parquet(
-                os.path.join(self.path, "posting_blocks")
-            )
-        return self._posting_blocks
+        return self._table("posting_blocks")
 
     @property
     def positional_blocks(self) -> DataFrame:
         """Persisted positional blocks (index/positions.py); raises if the
-        index was built without them — check :meth:`has_positional`.
-        Memoized per handle like posting_blocks (ADVICE r6): re-reading
-        re-ran schema inference + term_bucket partition discovery on every
-        phrase/proximity/phrase_ranked call."""
-        if self._positional_blocks is None:
-            self._positional_blocks = self.spark.read.parquet(
-                os.path.join(self.path, "positional_blocks")
-            )
-        return self._positional_blocks
+        index was built without them — check :meth:`has_positional`."""
+        return self._table("positional_blocks")
 
     def has_positional(self) -> bool:
         """Cheap existence probe (ADVICE r6): a filesystem check instead of
         a full parquet read; local paths and any Hadoop-visible FS agree
         with what spark.read.parquet would accept."""
-        if self._positional_blocks is not None:
-            return True
-        return os.path.isdir(os.path.join(self.path, "positional_blocks"))
+        return "positional_blocks" in self._tables or os.path.isdir(
+            os.path.join(self.path, "positional_blocks")
+        )
 
     @property
     def doc_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doc_stats"))
+        return self._table("doc_stats")
 
     @property
     def corpus_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "corpus_stats"))
+        return self._table("corpus_stats")
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "term_stats"))
+        return self._table("term_stats")
 
     @property
     def n_term_buckets(self) -> int | None:
         """Build-time bucket count from _meta; None for pre-meta indexes
-        (query paths then skip partition pruning rather than guess).
-        Memoized per handle (see __init__)."""
+        (no _meta directory — query paths then skip partition pruning
+        rather than guess). A _meta that exists but cannot be read raises:
+        treating it as pre-meta would silently turn pruning off. Memoized
+        per handle (see __init__)."""
         if self._n_term_buckets is not _UNSET:
             return self._n_term_buckets
-        try:
-            rows = self.spark.read.parquet(os.path.join(self.path, "_meta")).collect()
-            val = int(rows[0]["n_term_buckets"]) if rows else None
-        except Exception:
-            val = None
+        meta = os.path.join(self.path, "_meta")
+        val = None
+        if os.path.isdir(meta):
+            val = int(self.spark.read.parquet(meta).collect()[0]["n_term_buckets"])
         self._n_term_buckets = val
         return val
 
@@ -224,7 +219,7 @@ class StoredIndex:
             if content_pushdown:
                 rows = ranked.collect()
                 ids = sorted({r["doc_id"] for r in rows})
-                ranked = self.spark.createDataFrame(rows, schema=ranked.schema)
+                ranked = local_frame(self.spark, rows, ranked.schema)
                 documents = documents.filter(F.col("doc_id").isin(ids))
             # right-outer FROM documents (ADVICE r6): Spark cannot broadcast
             # the left (build) side of a left-outer join, so

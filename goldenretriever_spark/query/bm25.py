@@ -30,6 +30,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1, InvertedIndex
+from goldenretriever_spark.session import local_frame
 from goldenretriever_spark.tokenizer import tokens_column
 
 def tokenize_batch(queries, tokenizer: str = "simple") -> dict[int, list[str]]:
@@ -51,8 +52,12 @@ def tokenize_batch(queries, tokenizer: str = "simple") -> dict[int, list[str]]:
 
 
 def terms_frame(spark: SparkSession, terms: dict[int, list[str]]) -> DataFrame:
-    """(query_id, term) rows of a :func:`tokenize_batch` result."""
-    out = spark.createDataFrame(
+    """(query_id, term) rows of a :func:`tokenize_batch` result, as a JVM
+    LocalRelation (:func:`session.local_frame`): broadcasting it needs no
+    Python worker, so the decode worker stays a search call's one Python
+    crossing."""
+    out = local_frame(
+        spark,
         [(qid, t) for qid, ts in terms.items() for t in ts],
         "query_id long, term string",
     )
@@ -69,8 +74,9 @@ def query_terms_df(spark: SparkSession, queries, tokenizer: str = "simple") -> D
     List-typed batches tokenize ON THE DRIVER (:func:`tokenize_batch`) — a
     query batch is tiny, and the createDataFrame -> explode ->
     dropDuplicates plan it replaces paid a full shuffle + two stages inside
-    EVERY query call (r7, guide §2.4: remove shuffles outright). DataFrame
-    inputs (unknown size) keep the distributed plan."""
+    EVERY query call (r7, guide §2.4: remove shuffles outright) — and come
+    back as a JVM LocalRelation (:func:`terms_frame`). DataFrame inputs
+    (unknown size) keep the distributed plan."""
     if isinstance(queries, DataFrame):
         return (
             queries.select(

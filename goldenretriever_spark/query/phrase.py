@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from goldenretriever_spark.session import local_frame
 from goldenretriever_spark.tokenizer import simple_tokens
 
 
@@ -72,8 +73,8 @@ def phrase_match_postings(pp: DataFrame, phrase: list[str]) -> DataFrame:
         raise ValueError("phrase must be non-empty")
     n = len(phrase)
     spark = pp.sparkSession
-    qp = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(phrase)], "term string, offset int"
+    qp = local_frame(
+        spark, [(t, i) for i, t in enumerate(phrase)], "term string, offset int"
     )
     starts = pp.join(F.broadcast(qp), "term").select(
         "doc_id", (F.col("pos") - F.col("offset")).alias("start"), "offset"
@@ -254,7 +255,7 @@ def proximity_match_postings(
         raise ValueError("window must be >= 1")
     n = len(tset)
     spark = pp.sparkSession
-    qp = spark.createDataFrame([(t,) for t in tset], "term string")
+    qp = local_frame(spark, [(t,) for t in tset], "term string")
     hits = pp.join(F.broadcast(qp), "term")
     if n > 1:
         # Intersection-first pruning: the window explode multiplies every

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from goldenretriever_spark.index.build import B, K1
 from goldenretriever_spark.query.bm25 import idf_col, terms_frame, tokenize_batch
+from goldenretriever_spark.session import local_frame
 
 def _decode_scored(
     matched: DataFrame, avgdl: float, allowed_bc=None, repartition_q: bool = False
@@ -491,7 +492,7 @@ def _wand(
             .filter(F.col("rn") == k)
             .select("query_id", F.col("score").alias("theta"))
         )
-        theta = spark.createDataFrame(theta_sel.collect(), theta_sel.schema)
+        theta = local_frame(spark, theta_sel.collect(), theta_sel.schema)
 
         # ---- phase 2: prune blocks, decode survivors, exact-score ----
         survivors = (

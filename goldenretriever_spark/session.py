@@ -9,9 +9,11 @@ AQE coalescing trims the rest.
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -115,3 +117,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# a DDL parse is a py4j round trip; the parsed StructType is plain Python
+_parse_ddl = functools.lru_cache(maxsize=None)(StructType.fromDDL)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order),
+    planned as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` plans a LogicalRDD over a Python RDD, so
+    broadcasting even a one-row frame runs a job in Python workers that only
+    re-pickles the rows. A ``pyarrow.Table`` under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    LocalRelation instead, broadcast by a JVM-only job with no Python
+    worker. Arrow, not pandas: the pandas route falls back silently to the
+    Python-RDD plan when its conversion fails."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _parse_ddl(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+    )

@@ -2,6 +2,8 @@
 reach the parquet scan, small sides broadcast, no row-at-a-time Python UDFs
 in scoring paths, whole-stage codegen spans the BM25 arithmetic."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,6 +45,52 @@ def test_predicate_pushdown_on_term(stored):
     df = stored.posting_blocks.filter(F.col("term") == "def")
     plan = _plan(df)
     assert "PushedFilters" in plan and "term" in plan
+
+
+def test_warm_search_runs_no_job_and_no_python_rdd(stored, spark):
+    """On a warm StoredIndex, search() of a 1- and a 50-query batch launches
+    no Spark job before .collect(), and no frame built on the driver plans
+    as a Python RDD (Scan ExistingRDD) in search() or the phrase vote: the
+    decode worker stays a search call's one Python crossing."""
+    from goldenretriever_spark.query.phrase import (
+        phrase_match_postings,
+        positional_postings,
+    )
+
+    words = ["def", "return", "cache", "buffer", "stream", "fast"]
+    batches = (
+        [(0, "def return")],
+        [(i, f"{words[i % 6]} {words[(i * 5 + 1) % 6]}") for i in range(50)],
+    )
+    stored.search(batches[0], k=5).collect()  # warm the handle's memos
+    sc = spark.sparkContext
+    sc.setJobGroup("test-warm-search", "warm StoredIndex.search")
+    try:
+        frames = [stored.search(b, k=5) for b in batches]
+        jobs = sc.statusTracker().getJobIdsForGroup("test-warm-search")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+    docs = spark.createDataFrame(corpus.synth_corpus_pandas(100, seed=33))
+    pp = positional_postings(docs, text_col="content", id_col="path")
+    for df in [*frames, phrase_match_postings(pp, ["def", "return"])]:
+        assert df.collect()
+        plan = _plan(df)
+        assert "LocalTableScan" in plan, plan
+        assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_corrupt_meta_raises(spark, tmp_path):
+    """Only a MISSING _meta means a pre-meta index (no bucket pruning); an
+    unreadable one raises instead of silently turning pruning off."""
+    path = str(tmp_path / "idx")
+    assert StoredIndex(spark, path).n_term_buckets is None
+    os.makedirs(os.path.join(path, "_meta"))
+    with open(os.path.join(path, "_meta", "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        StoredIndex(spark, path).n_term_buckets
 
 
 def test_query_terms_join_is_broadcast(spark):

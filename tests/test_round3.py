@@ -176,8 +176,9 @@ def test_stored_index_search_dispatch(spark, tmp_path):
         assert math.isclose(g[3], w[3], rel_tol=1e-9)
 
     # edge-case inputs against the oracle: an empty query, a query of
-    # absent terms, k above every query's match count (200 docs), and one
-    # batch mixing them with normal queries
+    # absent terms, a non-ASCII query, a query whose tokens carry ' " and
+    # \, k above every query's match count (200 docs), one batch mixing
+    # them with normal queries, and an empty batch
     from goldenretriever_spark.index.build import with_doc_ids
     from goldenretriever_spark.oracle import build_oracle_index
     from goldenretriever_spark.oracle import top_k as oracle_top_k
@@ -186,12 +187,16 @@ def test_stored_index_search_dispatch(spark, tmp_path):
         [(r["doc_id"], r["content"]) for r in with_doc_ids(docs).collect()]
     )
     empty, absent = (2, ""), (3, "zzqxv qqjwk")
+    unicode, quoted = (4, "Größe def naïve 检索 return"), (5, 'it\'s "def" a\\b return')
     assert not any(t in oidx.postings for t in absent[1].split())
     for batch, k in (
         ([empty], 5),
         ([absent], 5),
+        ([unicode], 5),
+        ([quoted], 5),
         (qlist, 500),
-        ([qlist[0], empty, absent, qlist[1]], 500),
+        ([qlist[0], empty, absent, unicode, quoted, qlist[1]], 500),
+        ([], 5),
     ):
         rows = stored.search(batch, k=k).collect()
         for qid, qstr in batch:
